@@ -2268,8 +2268,7 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
     val dir = tableDir(name)
     if (java.nio.file.Files.exists(dir)) {
       val (fs, p) = Versioned.fsOf(spark, dir.toString)
-      fs.delete(p, true)
-      ()
+      SnapshotCache.deleteDir(fs, p)
     }
   }
 
@@ -2441,8 +2440,7 @@ class SqlLifecycle(val spark: SparkSession, val root: String) {
       s"DROP MATERIALIZED VIEW $name: no such materialized view")
     mviewSubs.remove(name).foreach(_.stop())
     val (fs, p) = Versioned.fsOf(spark, tableDir(name).toString)
-    fs.delete(p, true)
-    ()
+    SnapshotCache.deleteDir(fs, p)
   }
 
   /** Auto-refresh subscriptions started by `ALTER MATERIALIZED VIEW …

@@ -280,7 +280,7 @@ object Versioned {
     df.write.mode("overwrite").parquet(snapPath.toString)
     // flat snapshot dir: read-back schema == written frame schema (no
     // partition column to infer), so the first read skips the footer job
-    seedDirSchema(snapPath.toString, df.schema)
+    seedDirSchema(spark, snapPath.toString, df.schema)
     if (statsCols.nonEmpty) {
       import org.apache.spark.sql.functions.{col, count, element_at, input_file_name, lit, max, min, split}
       val aggs = count(lit(1)).as("__rows") +: statsCols.flatMap(c =>
@@ -296,34 +296,32 @@ object Versioned {
 
   private[ops] val StatsDirName = "_stats"
 
-  /** Session-wide parquet-schema cache for IMMUTABLE directories
-    * (committed snapshot dirs, stats/delete sidecars — written once,
-    * never modified). A plain `spark.read.parquet` re-infers the
-    * schema with a one-task footer-reading Spark job on every call;
-    * statement replays re-read the same snapshot once per statement,
-    * so the inference job multiplies (measured: 81 inference jobs in
-    * one 70-statement door replay at sf0.1). Keyed by dir path;
-    * growth is bounded by the snapshots a session touches. */
+  /** Parquet-schema cache for MUTABLE directories (mview state,
+    * swap/promote-managed plain tables), keyed by dir path. A plain
+    * `spark.read.parquet` re-infers the schema with a one-task
+    * footer-reading Spark job on every call; the dir's writer seeds the
+    * entry under the dir's monitor (`reseedMutableDirSchema`) and drops
+    * it when it cannot prove the read-back schema
+    * (`invalidateDirSchema`). Committed, write-once dirs use the
+    * per-session `SnapshotCache` instead. */
   private[graft] val dirSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  /** Seed `dirSchemaCache` at WRITE time, so even the FIRST read of a
-    * new immutable dir skips the one-task footer-inference job — in a
-    * statement replay every snapshot is read back at least once, so
-    * lazy filling still paid one inference job per snapshot written
-    * (O(snapshots) jobs per replayed table read; footer reads on an
-    * object store are tens of ms each). Callers must pass exactly the
-    * schema inference WOULD produce (data columns in written order,
-    * plus — for partitioned snapshots — the partition column at the
-    * type Spark's partition-value inference yields; writers bail to
-    * lazy inference when that type is not provably reproducible).
-    * putIfAbsent: a dir already read keeps its inferred schema. */
-  private[ops] def seedDirSchema(base: String,
+  /** Seed the session's `SnapshotCache` schema for a freshly written
+    * immutable dir at WRITE time, so even the FIRST read skips the
+    * one-task footer-inference job — in a statement replay every
+    * snapshot is read back at least once, so lazy filling still paid
+    * one inference job per snapshot written (O(snapshots) jobs per
+    * replayed table read; footer reads on an object store are tens of
+    * ms each). Callers must pass exactly the schema inference WOULD
+    * produce (data columns in written order, plus — for partitioned
+    * snapshots — the partition column at the type Spark's
+    * partition-value inference yields; writers bail to lazy inference
+    * when that type is not provably reproducible). A dir already read
+    * keeps its inferred schema. */
+  private[ops] def seedDirSchema(spark: SparkSession, base: String,
       schema: org.apache.spark.sql.types.StructType): Unit =
-    if (plainSchema(schema)) {
-      dirSchemaCache.putIfAbsent(base, schema)
-      ()
-    }
+    if (plainSchema(schema)) SnapshotCache.seedSchema(spark, base, schema)
 
   /** True when every field's parquet round-trip provably reproduces the
     * dtype. Exotic types whose round-trip is not the identity (or is
@@ -381,27 +379,33 @@ object Versioned {
       case None => spark.read.parquet(dir)
     }
 
-  /** Parquet read with the schema served from `dirSchemaCache` — only
-    * safe for immutable dirs (committed snapshots / sidecars), never
-    * for a directory still being assembled. `base` keys the cache and
-    * rides the `basePath` option so partition-dir reads keep their
-    * partition column. */
+  /** Parquet read of committed, write-once dirs (snapshots, sidecars)
+    * through the session's `SnapshotCache`: the first read of a
+    * `(base, paths)` resolves it (with the seeded schema when known,
+    * skipping the footer job) and every later one gets a fresh copy of
+    * that relation — no DataSource resolution, listing or inference.
+    * Never for a directory still being assembled or rewritten in place
+    * (see the cache's contract). `base` rides the `basePath` option so
+    * partition-dir reads keep their partition column. */
   private[graft] def readImmutable(spark: SparkSession, base: String,
-      paths: Seq[String]): DataFrame = {
-    // basePath pins partition-column recovery for sub-dir/file reads;
-    // a whole-dir (or single-file) read neither needs it nor — for a
-    // plain file — tolerates it ('basePath' must be a directory)
-    val reader0 = spark.read
-    val reader =
-      if (paths == Seq(base)) reader0 else reader0.option("basePath", base)
-    Option(dirSchemaCache.get(base)) match {
-      case Some(sch) => reader.schema(sch).parquet(paths: _*)
+      paths: Seq[String]): DataFrame =
+    SnapshotCache.relation(spark, base, paths) match {
+      case Some(rel) => spark.baseRelationToDataFrame(rel.copy()(spark))
       case None =>
-        val df = reader.parquet(paths: _*)
-        dirSchemaCache.put(base, df.schema)
+        // basePath pins partition-column recovery for sub-dir/file
+        // reads; a whole-dir (or single-file) read neither needs it
+        // nor — for a plain file — tolerates it ('basePath' must be a
+        // directory)
+        val reader0 = spark.read
+        val reader =
+          if (paths == Seq(base)) reader0 else reader0.option("basePath", base)
+        val df = SnapshotCache.schema(spark, base) match {
+          case Some(sch) => reader.schema(sch).parquet(paths: _*)
+          case None => reader.parquet(paths: _*)
+        }
+        SnapshotCache.remember(spark, base, paths, df)
         df
     }
-  }
 
   /** Single immutable-dir read (whole snapshots, sidecars). */
   private[graft] def readImmutableDir(spark: SparkSession, dir: String): DataFrame =
@@ -817,7 +821,7 @@ object Versioned {
         committedDirs.contains(s.getPath.getName) ||
           now - s.getModificationTime >= orphanMinAgeMs
       }
-    doomed.foreach(s => fs.delete(s.getPath, true))
+    doomed.foreach(s => SnapshotCache.deleteDir(fs, s.getPath))
     doomed.length
   }
 }

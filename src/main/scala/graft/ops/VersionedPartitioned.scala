@@ -431,6 +431,10 @@ object VersionedPartitioned {
       "max_value", "total_len", "table_bytes")
     val dest = analyzeDir(rootPath, cur)
     out.coalesce(1).write.mode("overwrite").parquet(dest.toString)
+    // the one dir the cached read path sees rewritten in place: a second
+    // ANALYZE at this version, or DROP + CREATE restarting versions at 1,
+    // overwrites `v<cur>` — drop what earlier reads resolved of it
+    SnapshotCache.evictUnder(dest)
   }
 
   /** Highest version with committed column stats, if any — a pure
@@ -457,8 +461,7 @@ object VersionedPartitioned {
     val cur = currentVersion(spark, root).getOrElse(av)
     val (_, rootPath) = Versioned.fsOf(spark, root)
     // cache-read is safe across re-ANALYZE overwrites of the same
-    // version dir: the stats OUTPUT schema is the fixed 8-column shape
-    // whatever columns were analyzed — contents change, schema cannot
+    // version dir: analyzeColumns evicts the dir after each rewrite
     Versioned.readImmutableDir(spark, analyzeDir(rootPath, av).toString)
       .withColumn("analyzed_version", lit(av))
       .withColumn("current_version", lit(cur))
@@ -768,7 +771,7 @@ object VersionedPartitioned {
         _.name.equalsIgnoreCase(partitionCol))
       // exotic-data-type bail lives inside seedDirSchema
       seedPartitionType(values).foreach { pt =>
-        Versioned.seedDirSchema(snapPath.toString,
+        Versioned.seedDirSchema(spark, snapPath.toString,
           StructType(dataCols :+ StructField(partitionCol, pt,
             nullable = true)))
       }
@@ -921,7 +924,7 @@ object VersionedPartitioned {
         .write.mode("overwrite")
         .parquet(new HPath(snapPath, Versioned.StatsDirName).toString)
       // flat dir, no partition column: read-back schema == frame schema
-      Versioned.seedDirSchema(
+      Versioned.seedDirSchema(spark,
         new HPath(snapPath, Versioned.StatsDirName).toString,
         statsFrame.schema)
     }
@@ -1021,7 +1024,7 @@ object VersionedPartitioned {
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith(partitionCol + "="))
       .map(_.getPath.getName).toSet
-    if (written.isEmpty) { fs.delete(snapPath, true); return None }
+    if (written.isEmpty) { SnapshotCache.deleteDir(fs, snapPath); return None }
     val overlap = latestManifest(spark, root)
       .map(_._2.entries.keySet.intersect(written)).getOrElse(Set.empty)
     if (overlap.nonEmpty) {
@@ -1092,7 +1095,7 @@ object VersionedPartitioned {
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith(partitionCol + "="))
       .map(_.getPath.getName).toSet
-    if (written.isEmpty) { fs.delete(snapPath, true); return None }
+    if (written.isEmpty) { SnapshotCache.deleteDir(fs, snapPath); return None }
     val overlap = latestManifest(spark, root)
       .map(_._2.entries.keySet.intersect(written)).getOrElse(Set.empty)
     if (overlap.nonEmpty) {
@@ -1290,7 +1293,7 @@ object VersionedPartitioned {
       .filter(s => s.isDirectory &&
         s.getPath.getName.startsWith(partitionCol + "="))
       .map(_.getPath.getName).toSet
-    if (written.isEmpty) { fs.delete(snapPath, true); return None }
+    if (written.isEmpty) { SnapshotCache.deleteDir(fs, snapPath); return None }
     val baseM = Versioned.branchHeadRaw(fs, rootPath, branch)
       .map(h => parse(h._2))
       .orElse(latestManifest(spark, root).map(_._2))
@@ -1560,8 +1563,9 @@ object VersionedPartitioned {
     if (spark.conf.getOption(DiscoveryKey).forall(_ == "32"))
       spark.conf.set(DiscoveryKey, "1024")
 
-  /** Immutable-dir reads with schema served from the shared session
-    * cache (`Versioned.dirSchemaCache`) — see the contract there. */
+  /** Committed-dir reads through the session's `SnapshotCache` — see
+    * the contract there. Every caller passes a committed snapshot (or
+    * one of its `_stats` sidecars) or a delete sidecar: all write-once. */
   private def readImmutable(spark: SparkSession, base: String,
       paths: Seq[String]): DataFrame =
     Versioned.readImmutable(spark, base, paths)
@@ -3090,7 +3094,7 @@ object VersionedPartitioned {
         committedDirs.contains(s.getPath.getName) ||
           now - s.getModificationTime >= orphanMinAgeMs
       }
-    if (!dryRun) doomed.foreach(s => fs.delete(s.getPath, true))
+    if (!dryRun) doomed.foreach(s => SnapshotCache.deleteDir(fs, s.getPath))
     // merge-on-read delete sidecars: same retention rules as snapshots
     // (kept while any retained or branch manifest references them;
     // superseded ones reclaimed immediately, orphans age-gated)
@@ -3106,7 +3110,7 @@ object VersionedPartitioned {
         committedDel.contains(s.getPath.getName) ||
           now - s.getModificationTime >= orphanMinAgeMs
       }
-    if (!dryRun) doomedDel.foreach(s => fs.delete(s.getPath, true))
+    if (!dryRun) doomedDel.foreach(s => SnapshotCache.deleteDir(fs, s.getPath))
     (doomed ++ doomedDel).map(_.getPath.getName).toSeq.sorted
   }
 }

@@ -38,11 +38,11 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // testdata files are immutable inputs: serve the parquet schema
-    // from the shared immutable-dir cache (graft.ops.Versioned) — a
-    // plain spark.read.parquet re-infers it with a one-task footer job
-    // on EVERY call, and the bench's 278 queries call load 1-3 times
-    // each (several hundred avoidable jobs per run)
+    // testdata files are immutable inputs: resolve them once per
+    // session through the committed-dir cache (graft.ops.SnapshotCache)
+    // — a plain spark.read.parquet re-infers the schema with a one-task
+    // footer job on EVERY call, and the bench's 278 queries call load
+    // 1-3 times each (several hundred avoidable jobs per run)
     val df = graft.ops.Versioned.readImmutableDir(spark,
       s"$sfDir/$name.parquet")
     tsCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>

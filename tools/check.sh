@@ -1,5 +1,6 @@
 #!/bin/bash
-# Full local gate: compile + specs + oracle diff (+ optional bench).
+# Full local gate: compile + specs + oracle diff + benchmark gate test
+# (+ optional bench).
 # Usage: tools/check.sh [--bench]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -8,6 +9,8 @@ out=target/verify_out
 rm -rf "$out"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out"
 python3 tools/compare.py /root/testdata/sf0.01 "$out"
+# the pipeline benchmark's gate must fail a run with a corrupted result
+python3 pipebench/test_gate.py
 if [[ "${1:-}" == "--bench" ]]; then
   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
     sbt -batch "runMain graft.Bench"
